@@ -700,11 +700,11 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
     (cookie banners, nav footers) that survive document-level dedup
     because their host pages differ.
 
-    Returns (doc_id, clean_text, n_lines_removed); clean_text preserves
-    surviving lines in order, a fully-boilerplate document collapses to
-    ''. Line identity is exact string equality via the module's 60-bit
-    md5 contract (oracle-portable); all lines participate, including
-    empty ones.
+    Returns (doc_id, clean_text, n_lines_removed) for every input doc;
+    surviving lines keep their order, a fully-boilerplate document
+    collapses to '', a NULL text (no lines) stays NULL with 0 removed.
+    Line identity is exact string equality via the module's 60-bit md5
+    contract (oracle-portable); all lines participate, empty ones too.
 
     Scale shape: posexplode lines -> groupBy(line_hash) count with
     map-side combine (the hot-line relation is DISTINCT hashes, so the
@@ -723,7 +723,7 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
     checkpoints to storage instead."""
     lines = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode_outer(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).withColumn("lh", _h60(F.col("line"))).persist()
     _register_persist(lines, _LINE_CACHE, release_line_cache)
     hot = (
@@ -732,6 +732,7 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
         .where(F.col("n_occ") >= min_count)
         .select("lh")
     )
+    # a NULL text's one (NULL, NULL) row has a NULL lh, which never joins
     kept = lines.join(hot, "lh", "left_anti")
     rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
@@ -741,19 +742,20 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
             ),
             "\n",
         ).alias("clean_text"),
-        F.count("*").alias("_n_kept"),
+        F.count("line").alias("_n_kept"),
     )
-    # every doc emits >= 1 line row (split of "" is [""]), so the per-doc
-    # line total IS the per-doc row count of the persisted relation —
-    # no third pass over the corpus text
+    # every doc emits >= 1 row (split of "" is [""], posexplode_outer of
+    # NULL is one NULL row), so grouping the persisted relation yields
+    # every doc and its line count — no third pass over the corpus text
     totals = lines.groupBy("doc_id").agg(
-        F.count("*").alias("_n_total")
+        F.count("line").alias("_n_total")
     )
     return (
         totals.join(rebuilt, "doc_id", "left")
         .select(
             "doc_id",
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
+            F.when(F.col("_n_total") > 0, F.coalesce(
+                F.col("clean_text"), F.lit(""))).alias("clean_text"),
             (F.col("_n_total") - F.coalesce(F.col("_n_kept"), F.lit(0)))
             .cast("long").alias("n_lines_removed"),
         )

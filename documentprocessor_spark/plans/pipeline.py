@@ -5,21 +5,21 @@ files → volatile in-memory job registry,
 /root/reference/Api/ServiceSideDocumentProcessor.cs:20,528-634) with the
 north_rule architecture:
 
-- explicit hash partitioning on url (``pmod(xxhash64(url), n_buckets)``) —
-  heavy domains spread uniformly because the key is the full url, and the
-  bucket column makes the layout reusable by downstream readers;
-- two vectorized stages (html→words pandas UDF; words→fields pandas UDF)
-  with NO shuffle between them — a single mapper chain per partition;
-- a per-partition manifest (rows/bytes/latency) appended on every commit —
+- ONE url partitioning decision, in ``run_job``: ``repartition(n, url)``
+  before the extractor, filed under ``url_bucket = pmod(hash(url), n)``,
+  the shuffle's own partition id — write task i writes only bucket i.
+  Heavy domains spread uniformly because the key is the full url;
+- one fused ``mapInArrow`` stage (html → words → fields), no shuffle inside;
+- a per-bucket manifest (rows/bytes/latency) appended on every commit —
   the lineage/metrics table the north_rule requires;
 - resume = left_anti join of the input against already-committed urls, so a
   killed job never reprocesses a finished document. With Iceberg the commit
   unit is a snapshot; on plain parquet (this sandbox) the commit unit is the
   run directory, which gives the same at-least-once-skip semantics.
 
-At 100 TB the plan is scan → mapper chain → write: the only shuffle is the
-optional repartition to the bucket count, and AQE coalesces the write
-partitions. Nothing here collects to the driver.
+At 100 TB the plan is scan → url Exchange → mapper chain → write, one file
+per bucket per run (AQE never coalesces a ``REPARTITION_BY_NUM``
+exchange). Nothing here collects to the driver.
 """
 
 from __future__ import annotations
@@ -37,31 +37,27 @@ DEFAULT_BUCKETS = 64
 
 
 def with_url_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """``F.hash`` is HashPartitioning's Murmur3 (seed 42): after
+    ``repartition(n, "url")`` the bucket IS the partition id. Change both
+    or neither (pinned by tests/test_html_pipeline.py)."""
     return df.withColumn(
-        "url_bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+        "url_bucket", F.pmod(F.hash(F.col("url")), F.lit(n_buckets))
     )
 
 
-def extract_from_pages(
-    pages: DataFrame, n_buckets: int | None = None, entry_c: bool = False
-) -> DataFrame:
+def extract_from_pages(pages: DataFrame, entry_c: bool = False) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → one result row per url.
 
     Column-pruned: only url/html/text flow into the kernels; Catalyst prunes
     the parquet scan to exactly those columns. ``entry_c=True`` swaps in the
     entry-C quirk-compatible kernel twin (config ``extraction.entry_c``).
     """
-    df = pages.select("url", "html", "text")
-    if n_buckets:
-        df = df.repartition(n_buckets, F.col("url"))
-    else:
-        # Single-row-group sources plan as one split, serializing the
-        # Python kernel on one core; the rescue repartition is a strict
-        # plan-time no-op on multi-split inputs (partitioning.py), so a
-        # 100 TB scan stays map-only while small exports parallelize.
-        from ..partitioning import ensure_min_parallelism
+    # Single-row-group sources plan as one split, serializing the Python
+    # kernel on one core; the rescue repartition is a plan-time no-op on
+    # multi-split or shuffled inputs, such as run_job's (partitioning.py).
+    from ..partitioning import ensure_min_parallelism
 
-        df = ensure_min_parallelism(df)
+    df = ensure_min_parallelism(pages.select("url", "html", "text"))
     return fused_extract(df, entry_c=entry_c).select(
         "url",
         "extracted_text",
@@ -289,7 +285,8 @@ BROADCAST_RESUME_LIMIT = 5_000_000
 
 
 def write_debug_samples(
-    pages: DataFrame, output_dir: str, run_id: str, n: int, extractor=None
+    pages: DataFrame, output_dir: str, run_id: str, n: int,
+    extractor=extract_from_pages,
 ) -> str:
     """Opt-in per-stage debug sample sink — the Spark analog of the
     reference's ``DebugOutputManager`` (``cli/debug_output.py:24-339``),
@@ -311,8 +308,7 @@ def write_debug_samples(
     words = parse_stage(sample).persist()
     words.write.mode("overwrite").parquet(f"{base}/words")
     normalize_stage(words).write.mode("overwrite").parquet(f"{base}/normalized")
-    extract = extractor or extract_from_pages
-    extract(sample, None).write.mode("overwrite").parquet(f"{base}/fields")
+    extractor(sample).write.mode("overwrite").parquet(f"{base}/fields")
     words.unpersist()
     sample.unpersist()
     return base
@@ -326,7 +322,7 @@ def run_job(
     resume: bool = True,
     run_id: str | None = None,
     collect_stats: bool = True,
-    extractor=None,
+    extractor=extract_from_pages,
     debug_samples: int = 0,
 ) -> dict:
     """Execute the extraction job with resume + manifest. Returns run stats.
@@ -335,9 +331,10 @@ def run_job(
     full scan + anti-join) — the setting for petabyte corpora, where the
     manifest already carries the committed totals.
 
-    ``extractor`` swaps the extraction stage (default extract_from_pages;
-    pass ``lambda p, n: extract_from_pages_with_model(p)`` for the model
-    path) — commit/resume/spans/manifest semantics are identical.
+    ``extractor`` swaps the extraction stage, a function of the pages that
+    run_job has already repartitioned on url (pass
+    ``extract_from_pages_with_model`` for the model path) —
+    commit/resume/spans/manifest semantics are identical.
 
     ``debug_samples > 0`` additionally writes an N-row sample of each
     pipeline stage under ``<output_dir>/debug/run_id=<id>/`` (see
@@ -364,8 +361,9 @@ def run_job(
         write_debug_samples(todo, output_dir, run_id, debug_samples, extractor)
 
     t0 = time.monotonic()
-    extract = extractor or extract_from_pages
-    results = with_url_bucket(extract(todo, n_buckets), n_buckets).withColumn(
+    # the run's one url shuffle: write task i holds exactly url_bucket=i
+    todo = todo.repartition(n_buckets, "url")
+    results = with_url_bucket(extractor(todo), n_buckets).withColumn(
         "run_id", F.lit(run_id)
     )
     results.write.mode("append").partitionBy("url_bucket").parquet(results_path)

@@ -4045,10 +4045,10 @@ _ORACLE_PDF = """
 
 def q_h13_bucket_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H13 deterministic job bucketing (plans/pipeline.with_url_bucket:
-    xxhash64(url) % n, never Python hash()): bucket-occupancy distribution
-    over synthesized urls. ROWS-ONLY driver check — xxhash64 has no DuckDB
-    twin; determinism and balance are asserted here (64 non-empty buckets,
-    max skew bounded), byte-level stability is pinned by the resume tests."""
+    pmod(hash(url), n), never Python hash()): bucket-occupancy distribution
+    over synthesized urls. ROWS-ONLY driver check — Spark's Murmur3 has no
+    DuckDB twin; determinism and balance are asserted here (64 non-empty
+    buckets, max skew bounded), byte-level stability by the resume tests."""
     from .plans.pipeline import with_url_bucket
 
     docs = load_table(spark, sf_dir, "documents")

@@ -11,7 +11,7 @@ Reads the pages table (url, warc_ts, html, text, lang) — or builds it
 straight from a Common-Crawl WARC directory (--format warc; HTML and PDF
 response bodies both extract, the fused kernel content-sniffs %PDF-) or a
 directory of PDFs (--format pdf-dir) — runs the fused extraction pipeline,
-writes url-hash-bucketed results + spans + a per-partition manifest, and
+writes url-hash-bucketed results + spans + a per-bucket manifest, and
 resumes from the last manifest-acknowledged commit if killed. On a
 cluster, pass the master/executor confs on the spark-submit command line
 as usual; the session factory only fills in defaults when unset.
@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from functools import partial
 
 
 def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
@@ -76,6 +77,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     )
 
     from documentprocessor_spark.plans.pipeline import (
+        extract_from_pages,
         extract_from_pages_with_model,
         run_job,
     )
@@ -124,18 +126,11 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     # mode writes to its own subdirectory (different output schema)
     output = args.output if mode == "heuristic" else f"{args.output}/model"
     if mode == "heuristic":
-        from documentprocessor_spark.plans.pipeline import extract_from_pages
-
-        base_extractor = (
-            None
-            if not entry_c
-            else (lambda p, n: extract_from_pages(p, n, entry_c=True))
-        )
+        extractor = partial(extract_from_pages, entry_c=entry_c)
     else:
-        m_name, m_dev = cfg["model"]["name_or_path"], cfg["model"]["device"]
-        base_extractor = (  # noqa: E731
-            lambda p, n: extract_from_pages_with_model(p, m_name, m_dev)
-        )
+        extractor = partial(extract_from_pages_with_model,
+                            model_name=cfg["model"]["name_or_path"],
+                            device=cfg["model"]["device"])
 
     # extraction.apply_quality: opt-in H11 confidence filter + H10 totals
     # verification on the committed rows (SURVEY §8.7 — defined by the
@@ -143,25 +138,22 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     if ext_cfg["apply_quality"]:
         from documentprocessor_spark.plans.pipeline import (
             confidence_filter,
-            extract_from_pages,
             with_quality_columns,
         )
 
-        inner = base_extractor or (lambda p, n: extract_from_pages(p, n))
+        inner = extractor
         min_conf = ext_cfg["min_confidence"]
         verify = ext_cfg["verify_totals"]
 
-        def extractor(p, n):
+        def extractor(p):
             # H10 verifies the RAW extracted amounts (the reference's
             # verify_totals input), BEFORE the H11 filter nulls low-
             # confidence fields — same order q_h10_h11_quality certifies
-            out = inner(p, n)
+            out = inner(p)
             if verify:
                 out = with_quality_columns(out)
             return confidence_filter(out, min_confidence=min_conf)
 
-    else:
-        extractor = base_extractor
     stats = run_job(
         spark,
         pages,

@@ -187,7 +187,7 @@ def test_approx_distinct_within_tolerance(spark):
     assert abs(approx - exact) <= max(1, exact * 0.05)
 
 
-def test_model_mode_job_resumes(spark, tmp_path):
+def test_model_mode_job_resumes(spark, tmp_path, one_file_per_bucket_per_run):
     """Model mode goes through run_job's commit/resume semantics too."""
     from documentprocessor_spark.plans.pipeline import (
         extract_from_pages_with_model,
@@ -197,7 +197,7 @@ def test_model_mode_job_resumes(spark, tmp_path):
     rows = [(u, ts, h, t, l) for u, ts, h, t, l, *_ in generate_corpus(15, seed=17)]
     pages = spark.createDataFrame(rows, PAGES)
     out = str(tmp_path / "modeljob")
-    extractor = lambda p, n: extract_from_pages_with_model(p)  # noqa: E731
+    extractor = extract_from_pages_with_model  # one argument: the pages
     first = run_job(spark, pages.limit(8), out, n_buckets=4, extractor=extractor)
     second = run_job(spark, pages, out, n_buckets=4, extractor=extractor)
     assert second["rows_skipped_resume"] == 8
@@ -205,6 +205,8 @@ def test_model_mode_job_resumes(spark, tmp_path):
     res = spark.read.parquet(f"{out}/results")
     assert res.count() == 15
     assert "vendor_name" in res.columns
+    # the model extractor gets run_job's url-repartitioned input too
+    one_file_per_bucket_per_run(f"{out}/results")
 
 
 def test_domain_length_quantiles_grouped_map(spark):

@@ -465,14 +465,16 @@ def test_dedup_cache_scope_owns_persists(spark):
 def test_cross_doc_line_dedup_kills_boilerplate_lines(spark):
     """Lines occurring >= min_count times corpus-wide vanish (within-doc
     repeats count, as in RefinedWeb); survivors keep order; a fully-
-    boilerplate doc collapses to ''."""
+    boilerplate doc collapses to ''; NULL texts keep their row (NULL, 0)
+    and count toward no line, so the operator is 1:1."""
     docs = spark.createDataFrame(
         [(1, "cookie banner\nreal content one\nnav footer"),
          (2, "cookie banner\nother content two\nnav footer"),
          (3, "cookie banner\nnav footer"),
          (4, "solo line\nsolo line\nunique middle"),  # within-doc repeat
-         (5, "totally unique document line")],
-        ["doc_id", "text"],
+         (5, "totally unique document line"),
+         (6, None), (7, None)],
+        "doc_id long, text string",
     )
     out = {r["doc_id"]: (r["clean_text"], r["n_lines_removed"])
            for r in dedup.cross_doc_line_dedup(
@@ -482,6 +484,8 @@ def test_cross_doc_line_dedup_kills_boilerplate_lines(spark):
     assert out[3] == ("", 2)
     assert out[4] == ("unique middle", 2)  # the within-doc pair dies too
     assert out[5] == ("totally unique document line", 0)
+    assert out[6] == out[7] == (None, 0)
+    assert len(out) == 7
 
 
 def test_cross_doc_line_dedup_min_count_threshold(spark):

@@ -103,7 +103,7 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
     # simulate a run that died after the results write: write result rows
     # with a run_id that never reaches the manifest
     partial = with_url_bucket(
-        extract_from_pages(corpus_pages.limit(10), 4), 4
+        extract_from_pages(corpus_pages.limit(10)), 4
     ).withColumn("run_id", F.lit("deadrun000000"))
     partial.write.mode("append").partitionBy("url_bucket").parquet(f"{out}/results")
 
@@ -119,7 +119,8 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
     assert committed.where(F.col("run_id") == "deadrun000000").count() == 0
 
 
-def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
+def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path,
+                                        one_file_per_bucket_per_run):
     out = str(tmp_path / "job")
     first = run_job(spark, corpus_pages.limit(30), out, n_buckets=8)
     assert first["rows_skipped_resume"] == 0
@@ -136,6 +137,26 @@ def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
     assert spans.join(
         spark.read.parquet(f"{out}/results"), "url", "left_anti"
     ).count() == 0
+    one_file_per_bucket_per_run(f"{out}/results")
+
+
+@pytest.mark.parametrize("n", [4, 8, 61, 64])
+def test_url_bucket_is_the_repartition_partition_id(spark, n):
+    """with_url_bucket's pmod(hash(url), n) is the partition id that
+    repartition(n, url) assigns (Murmur3, seed 42, as HashPartitioning).
+    If a Spark upgrade changes HashPartitioning this goes red, instead of
+    run_job silently writing n files per task again."""
+    from documentprocessor_spark.plans.pipeline import with_url_bucket
+
+    urls = spark.range(5000).select(
+        F.concat(F.lit("https://h"), (F.col("id") % 37).cast("string"),
+                 F.lit(".example/p/"), F.col("id").cast("string")).alias("url")
+    )
+    got = with_url_bucket(urls.repartition(n, "url"), n).withColumn(
+        "pid", F.spark_partition_id()
+    )
+    assert got.where(F.col("url_bucket") != F.col("pid")).count() == 0
+    assert got.select("pid").distinct().count() == n
 
 
 def test_results_read_prunes_url_bucket_partitions(spark, tmp_path):

@@ -5,9 +5,9 @@ production path):
 
 1. run_job neutrality: the SAME extraction job over a uniform-domain corpus
    vs a zipf corpus whose top domain holds ~30% of all pages, at 2
-   parallelism levels. The job partitions on pmod(xxhash64(url), buckets) —
-   url-hash, not domain — so wall times should be ~equal: domain skew
-   cannot create a hot extraction bucket BY CONSTRUCTION.
+   parallelism levels. The job buckets on pmod(hash(url), buckets), its
+   url repartition's partition id — url-hash, not domain — so wall times
+   should be ~equal: domain skew cannot create a hot bucket BY CONSTRUCTION.
 
 2. curate skew safety: curate_documents (star-edge + groupBy-survivors
    form) vs the pre-round-4 naive plan (window exact dedup + band-join
