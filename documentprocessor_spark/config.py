@@ -33,7 +33,6 @@ DEFAULT_CONFIG: Dict[str, Any] = {
         "mode": "heuristic",      # heuristic | model
         "buckets": 64,            # url-hash result partitions
         "resume": True,           # skip manifest-committed urls
-        "stats": False,           # collect skip/count stats (extra scans)
         "debug_samples": 0,       # >0: write N-row per-stage debug samples
     },
     "extraction": {

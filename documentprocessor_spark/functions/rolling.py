@@ -106,6 +106,9 @@ def powers_table(spark: SparkSession, maxlen: int) -> DataFrame:
     df = spark.createDataFrame(
         pd.DataFrame({"e": range(maxlen + 1), "pw1": pw1, "pw2": pw2})
     )
+    # a stopped application's tables are dead handles: drop them
+    for stale in [k for k in _POWERS_CACHE if k[0] != key[0]]:
+        del _POWERS_CACHE[stale]
     _POWERS_CACHE[key] = df
     return df
 

@@ -67,14 +67,6 @@ def shingle_transform(toks: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_col(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Shingles of a raw text column. Single-expression convenience form:
-    the split re-evaluates per lambda element (see shingle_transform) —
-    operators on a hot path must project the split first and call
-    shingle_transform on the attribute instead."""
-    return shingle_transform(F.split(text, " "), n)
-
-
 def doc_shingles(df: DataFrame, id_col: str, text_col: str,
                  n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """Long (id, shingle) pairs; text column dropped before the explode so

@@ -27,11 +27,12 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import fused_extract
 from ..schemas import SCALAR_FIELDS
+from ..sources.tables import read_parquet_or_none
 
 DEFAULT_BUCKETS = 64
 
@@ -220,44 +221,38 @@ def results_to_spans(results: DataFrame) -> DataFrame:
     )
 
 
-def _manifest_run_ids(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(manifest_path).select("run_id").distinct()
-    except Exception:
-        return None  # first run: no manifest yet
+def read_manifest(spark: SparkSession, output_dir: str) -> DataFrame | None:
+    """The run_job manifest, or None when nothing is committed yet: the
+    path is missing, or holds no data files (a first run killed during its
+    manifest write leaves only ``_temporary/``). Any other read failure
+    raises: a resume that took a corrupt manifest for "nothing committed"
+    would reprocess and re-append every url."""
+    return read_parquet_or_none(spark, f"{output_dir}/manifest")
 
 
-def _committed_urls(
-    spark: SparkSession, results_path: str, manifest_path: str
-) -> DataFrame | None:
-    """COMMITTED urls = results rows whose run_id is acknowledged in the
-    manifest. The manifest is written LAST, so it is the commit marker: a
-    run killed after the results write but before the manifest write leaves
-    orphan result rows that are NOT treated as committed — they are
-    reprocessed and the orphans are superseded (readers go through
-    read_committed_results, which applies the same filter)."""
-    runs = _manifest_run_ids(spark, manifest_path)
-    if runs is None:
-        return None
-    try:
-        results = spark.read.parquet(results_path)
-    except Exception:
-        return None
-    return (
-        results.select("url", "run_id")
-        .join(F.broadcast(runs), "run_id", "left_semi")
-        .select("url")
+def committed_results(
+    spark: SparkSession, output_dir: str, manifest: DataFrame
+) -> DataFrame:
+    """The one definition of COMMITTED: results rows whose run_id the
+    manifest acknowledges. The manifest is written LAST, so it is the
+    commit marker: a run killed after the results write but before the
+    manifest write leaves orphan rows that are not committed — resume
+    reprocesses their urls and read_committed_results hides them."""
+    runs = F.broadcast(manifest.select("run_id").distinct())
+    return spark.read.parquet(f"{output_dir}/results").join(
+        runs, "run_id", "left_semi"
     )
 
 
 def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
-    """The consumer-facing view of the results table: only rows from runs
-    the manifest acknowledged, with orphan duplicates from crashed runs
-    removed (first committed run per url wins)."""
-    results = spark.read.parquet(f"{output_dir}/results")
-    runs = _manifest_run_ids(spark, f"{output_dir}/manifest")
-    if runs is not None:
-        results = results.join(F.broadcast(runs), "run_id", "left_semi")
+    """The consumer-facing view of the results table: only committed rows
+    (``committed_results``; none before the first manifest), one per url —
+    the first committed run per url wins."""
+    manifest = read_manifest(spark, output_dir)
+    if manifest is None:
+        results = spark.read.parquet(f"{output_dir}/results").limit(0)
+    else:
+        results = committed_results(spark, output_dir, manifest)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("url").orderBy("run_id")
@@ -268,14 +263,11 @@ def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
     )
 
 
-def _committed_count(spark: SparkSession, manifest_path: str) -> int:
+def _committed_count(manifest: DataFrame) -> int:
     """Committed row count from the manifest (a few rows per run-bucket) —
     never scans the results table."""
-    try:
-        row = spark.read.parquet(manifest_path).agg(F.sum("rows")).first()
-        return int(row[0] or 0)
-    except Exception:
-        return 0
+    row = manifest.agg(F.sum("rows")).first()
+    return int(row[0] or 0)
 
 
 # Below this many committed urls the resume anti-join broadcasts the
@@ -321,15 +313,19 @@ def run_job(
     n_buckets: int = DEFAULT_BUCKETS,
     resume: bool = True,
     run_id: str | None = None,
-    collect_stats: bool = True,
     extractor=extract_from_pages,
     debug_samples: int = 0,
 ) -> dict:
     """Execute the extraction job with resume + manifest. Returns run stats.
 
-    ``collect_stats=False`` skips the input/skip counting jobs (each is a
-    full scan + anti-join) — the setting for petabyte corpora, where the
-    manifest already carries the committed totals.
+    ``resume=True`` skips the urls of ``committed_results``.
+    ``rows_skipped_resume`` is the input row count minus the count left to
+    extract, both observed on the results write itself — no extra pass.
+    The observations sit below the url shuffle, in its map stage, where
+    Spark does not promise once-per-task metric updates: if a lost
+    executor or a fetch failure makes Spark re-run that stage, both counts
+    can include rows twice, so the skip count is best-effort under stage
+    retries. ``rows_total_committed`` comes from the manifest and is exact.
 
     ``extractor`` swaps the extraction stage, a function of the pages that
     run_job has already repartitioned on url (pass
@@ -344,21 +340,25 @@ def run_job(
     spans_path = f"{output_dir}/spans"
     manifest_path = f"{output_dir}/manifest"
 
-    todo = pages
-    skipped = 0
-    if resume:
-        committed = _committed_urls(spark, results_path, manifest_path)
-        if committed is not None:
-            n_committed = _committed_count(spark, manifest_path)
-            if n_committed <= BROADCAST_RESUME_LIMIT:
-                committed = F.broadcast(committed)
-            todo = todo.join(committed, "url", "left_anti")
-            if collect_stats:
-                before = pages.count()
-                skipped = before - todo.count()
+    prior = read_manifest(spark, output_dir) if resume else None
+    committed = None
+    if prior is not None:
+        committed = committed_results(spark, output_dir, prior).select("url")
+        if _committed_count(prior) <= BROADCAST_RESUME_LIMIT:
+            committed = F.broadcast(committed)
+
+    def skip_committed(df: DataFrame) -> DataFrame:
+        return df if committed is None else df.join(committed, "url", "left_anti")
 
     if debug_samples > 0:
-        write_debug_samples(todo, output_dir, run_id, debug_samples, extractor)
+        write_debug_samples(
+            skip_committed(pages), output_dir, run_id, debug_samples, extractor
+        )
+
+    # observed after the debug samples, so only the results write fills them
+    seen, left = Observation("run_job-in"), Observation("run_job-todo")
+    n_rows = F.count(F.lit(1)).alias("rows")
+    todo = skip_committed(pages.observe(seen, n_rows)).observe(left, n_rows)
 
     t0 = time.monotonic()
     # the run's one url shuffle: write task i holds exactly url_bucket=i
@@ -394,12 +394,12 @@ def run_job(
     manifest.write.mode("append").parquet(manifest_path)
     committed_now.unpersist()
 
-    # committed total from the manifest aggregate — no results-table scan
-    n_done = _committed_count(spark, manifest_path)
+    # committed total from the manifest just appended to — no results scan
+    n_done = _committed_count(spark.read.parquet(manifest_path))
     return {
         "run_id": run_id,
         "results_path": results_path,
         "rows_total_committed": n_done,
-        "rows_skipped_resume": skipped,
+        "rows_skipped_resume": seen.get["rows"] - left.get["rows"],
         "elapsed_sec": elapsed,
     }

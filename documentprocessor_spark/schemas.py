@@ -20,7 +20,6 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -137,18 +136,5 @@ SPAN = StructType(
         StructField("value", StringType(), True),
         StructField("confidence", DoubleType(), True),
         StructField("box", BOX, True),
-    ]
-)
-
-# Per-partition lineage/metrics manifest (resume + observability).
-MANIFEST = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("url_bucket", IntegerType(), True),
-        StructField("rows", LongType(), False),
-        StructField("bytes_in", LongType(), True),
-        StructField("ms", DoubleType(), True),
-        StructField("status", StringType(), False),
     ]
 )

@@ -45,6 +45,24 @@ def write_results(df: DataFrame, path_or_table: str, partition_col: str = "url_b
         df.write.mode("append").partitionBy(partition_col).parquet(path_or_table)
 
 
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when nothing was written
+    there yet: the path does not exist, or holds no data files (a first
+    write killed before its commit leaves only ``_temporary/``). Every
+    other read failure (corrupt footer, permissions, a transient FS error)
+    raises: treating it as "nothing written" would silently redo or
+    overwrite committed work. Matched on the error condition, so
+    non-local filesystems work too."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def read_results(
     spark: SparkSession,
     path: str,

@@ -408,6 +408,22 @@ def test_spans_plan_exchange_budget(docs_df):
     assert n <= 6, f"{n} hash exchanges:\n{plan}"
 
 
+def test_powers_cache_evicts_other_applications(spark):
+    """The powers memo drops entries of other (stopped) applications on
+    insert, so a long-lived driver that restarts sessions keeps no dead
+    DataFrame handles; the live application's entries stay."""
+    from documentprocessor_spark.functions import rolling
+
+    app = spark.sparkContext.applicationId
+    kept = rolling.powers_table(spark, 16)
+    rolling._POWERS_CACHE[("app-stopped-0000", 16)] = object()
+    rolling._POWERS_CACHE.pop((app, 17), None)
+    rolling.powers_table(spark, 17)
+    assert ("app-stopped-0000", 16) not in rolling._POWERS_CACHE
+    assert rolling._POWERS_CACHE[(app, 16)] is kept
+    assert (app, 17) in rolling._POWERS_CACHE
+
+
 def test_dedup_cache_scope_owns_persists(spark):
     """Inside dedup_cache_scope, interleaved operator calls keep BOTH
     intermediates persisted (the module-global slot would drop the first);

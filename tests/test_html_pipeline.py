@@ -106,6 +106,8 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
         extract_from_pages(corpus_pages.limit(10)), 4
     ).withColumn("run_id", F.lit("deadrun000000"))
     partial.write.mode("append").partitionBy("url_bucket").parquet(f"{out}/results")
+    # no manifest yet: nothing is committed, not all the orphans
+    assert read_committed_results(spark, out).count() == 0
 
     stats = run_job(spark, corpus_pages, out, n_buckets=4)
     # nothing was considered committed -> nothing skipped, all reprocessed
@@ -117,6 +119,55 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
     committed = read_committed_results(spark, out)
     assert committed.count() == corpus_pages.count()
     assert committed.where(F.col("run_id") == "deadrun000000").count() == 0
+
+
+def test_run_killed_during_manifest_write_is_reprocessed(
+    spark, corpus_pages, tmp_path
+):
+    """A first run killed while writing its manifest leaves orphan results
+    and a manifest dir holding only ``_temporary/``: nothing is committed,
+    so the next run must skip nothing and commit every url, not fail."""
+    import os
+
+    from documentprocessor_spark.plans.pipeline import (
+        read_committed_results,
+        with_url_bucket,
+        extract_from_pages,
+    )
+
+    out = str(tmp_path / "job")
+    partial = with_url_bucket(
+        extract_from_pages(corpus_pages.limit(10)), 4
+    ).withColumn("run_id", F.lit("deadrun000000"))
+    partial.write.mode("append").partitionBy("url_bucket").parquet(f"{out}/results")
+    os.makedirs(f"{out}/manifest/_temporary/0")
+    assert read_committed_results(spark, out).count() == 0
+
+    stats = run_job(spark, corpus_pages, out, n_buckets=4)
+    assert stats["rows_skipped_resume"] == 0
+    assert stats["rows_total_committed"] == corpus_pages.count()
+    committed = read_committed_results(spark, out)
+    assert committed.count() == corpus_pages.count()
+    assert committed.where(F.col("run_id") == "deadrun000000").count() == 0
+
+
+def test_corrupt_manifest_fails_run_job_loudly(spark, corpus_pages, tmp_path):
+    """An unreadable manifest is not "nothing committed yet": run_job must
+    raise instead of reprocessing and re-appending every committed url."""
+    import glob
+    import os
+
+    out = str(tmp_path / "job")
+    run_job(spark, corpus_pages.limit(20), out, n_buckets=4)
+    n_results = spark.read.parquet(f"{out}/results").count()
+    for f in glob.glob(f"{out}/manifest/*.parquet"):
+        with open(f, "r+b") as fh:
+            fh.truncate(os.path.getsize(f) // 2)
+    for f in glob.glob(f"{out}/manifest/.*.crc"):
+        os.remove(f)  # a store without checksum sidecars, e.g. S3
+    with pytest.raises(Exception, match="manifest/part-"):
+        run_job(spark, corpus_pages, out, n_buckets=4)
+    assert spark.read.parquet(f"{out}/results").count() == n_results
 
 
 def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path,

@@ -163,11 +163,9 @@ def main() -> None:
             pages = spark.read.parquet(f"{tmp}/pages_{shape}")
             # warm python workers once per session
             if shape == "uniform":
-                run_job(spark, pages.limit(2000), f"{tmp}/warm_{cores}",
-                        collect_stats=False)
+                run_job(spark, pages.limit(2000), f"{tmp}/warm_{cores}")
             lvl[f"run_job_{shape}_sec"] = timed(lambda: run_job(
-                spark, pages, f"{tmp}/out_{shape}_{cores}", collect_stats=False,
-                resume=False,
+                spark, pages, f"{tmp}/out_{shape}_{cores}", resume=False,
             ))
         docs = spark.read.parquet(f"{tmp}/docs")
         n_star = None
